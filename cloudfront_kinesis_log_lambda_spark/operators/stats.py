@@ -157,15 +157,18 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     ]
     # r = cov/(σa·σb) from the built-in co-moment aggregates; NOT
     # F.corr, whose internal divide throws under Spark 4 ANSI when a
-    # column is constant — try_divide yields NULL there, matching
-    # SQL corr semantics on both engines
+    # column is constant. A constant column's r is NULL (SQL corr
+    # semantics), guarded exactly by min = max: the streaming variance
+    # of a constant need not come out exactly 0, and a rounding-noise σ
+    # in the denominator turns into an arbitrary r
     agg = df.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         *[
             F.round(
                 F.expr(
-                    f"try_divide(covar_samp({a}, {b}), "
-                    f"stddev_samp({a}) * stddev_samp({b}))"
+                    f"CASE WHEN min({a}) = max({a}) OR min({b}) = max({b}) "
+                    f"THEN NULL ELSE try_divide(covar_samp({a}, {b}), "
+                    f"stddev_samp({a}) * stddev_samp({b})) END"
                 ),
                 STATS_ROUND,
             ).alias(f"{a}__{b}")

@@ -352,3 +352,101 @@ def test_sink_with_assume_role_factory_delivers(spark, tmp_path):
         for line in open(p)
     )
     assert got == sorted(f"d{i}" for i in range(40))
+
+
+# --- sink shape: shipping tasks, clients and put sizes ----------------------
+
+
+def _counting_factory(out_dir):
+    """Client factory whose every client leaves a file, and whose every
+    put appends its size to that file. Function-local classes, so
+    cloudpickle ships them to the executors by value."""
+    import os
+    import uuid
+
+    class CountingKinesis:
+        def __init__(self):
+            self.path = os.path.join(out_dir, f"client-{uuid.uuid4().hex}")
+            open(self.path, "w").close()
+
+        def put_records(self, StreamName, Records):
+            with open(self.path, "a") as f:
+                f.write(f"{len(Records)}\n")
+            return {"FailedRecordCount": 0, "Records": [{} for _ in Records]}
+
+    return CountingKinesis
+
+
+def _puts_per_client(out_dir):
+    import glob
+
+    return [
+        [int(line) for line in open(p)]
+        for p in sorted(glob.glob(f"{out_dir}/client-*"))
+    ]
+
+
+def _wire(spark, n, partitions):
+    return spark.createDataFrame(
+        [(f"d{i}", f"{i:032d}") for i in range(n)], "Data string, PartitionKey string"
+    ).repartition(partitions)
+
+
+def test_sink_parallelism_caps_shipping_tasks(spark, tmp_path):
+    """16 input partitions, parallelism=2: the partitions are coalesced
+    into exactly two shipping tasks, one client each, and every row ships."""
+    df = _wire(spark, 400, 16)
+    assert df.rdd.getNumPartitions() == 16
+    stats = KinesisSink(
+        "s", parallelism=2, client_factory=_counting_factory(str(tmp_path))
+    ).write(df)
+    puts = _puts_per_client(str(tmp_path))
+    assert len(puts) == 2
+    assert sum(map(sum, puts)) == 400
+    assert stats.records == 400 and stats.batches == sum(map(len, puts))
+
+
+def test_sink_default_never_adds_tasks(spark, tmp_path):
+    """The default (one task per core) is an upper bound, not a fan-out:
+    a 3-partition input builds at most 3 clients."""
+    df = _wire(spark, 90, 3)
+    stats = KinesisSink("s", client_factory=_counting_factory(str(tmp_path))).write(df)
+    puts = _puts_per_client(str(tmp_path))
+    assert 1 <= len(puts) <= 3
+    assert sum(map(sum, puts)) == 90 == stats.records
+
+
+def test_sink_puts_span_arrow_batches(spark, tmp_path):
+    """One partition of 1250 rows arriving in 300-row Arrow batches still
+    goes out as full 500-record puts."""
+    df = _wire(spark, 1250, 1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        KinesisSink("s", client_factory=_counting_factory(str(tmp_path))).write(df)
+    finally:
+        spark.conf.set(key, old)
+    assert _puts_per_client(str(tmp_path)) == [[500, 500, 250]]
+
+
+def test_sink_write_reports_dropped_records(spark):
+    """Records given up on after max_attempts are not lost silently:
+    write() returns them in the merged stats."""
+
+    class RejectAll:
+        def put_records(self, StreamName, Records):
+            return {
+                "FailedRecordCount": len(Records),
+                "Records": [
+                    {"ErrorCode": "ProvisionedThroughputExceededException"}
+                    for _ in Records
+                ],
+            }
+
+    stats = KinesisSink(
+        "s", parallelism=2, max_attempts=2, client_factory=RejectAll
+    ).write(_wire(spark, 30, 2))
+    assert stats.dropped_records == 30
+    assert stats.records == 60 and stats.retried_records == 60
+    assert stats.batches == 4  # two tasks × attempts 0 and 1
