@@ -26,13 +26,12 @@ plans don't express:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudfront_kinesis_log_lambda_spark.session import scoped_conf
 
-@contextmanager
+
 def with_runtime_bloom_filters(
     spark: SparkSession,
     creation_side_max: str = "100MB",
@@ -54,23 +53,16 @@ def with_runtime_bloom_filters(
     afterwards. Injection still requires the structural conditions: a
     selective filter on the creation side and a non-broadcast join.
     """
-    conf = spark.conf
-    keys = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": creation_side_max,
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": application_side_min,
-    }
-    old = {k: conf.get(k, None) for k in keys}
-    for k, v in keys.items():
-        conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            conf.unset(k) if v is None else conf.set(k, v)
+    return scoped_conf(
+        spark,
+        {
+            "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": creation_side_max,
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": application_side_min,
+        },
+    )
 
 
-@contextmanager
 def with_aqe_skew_join(
     spark: SparkSession,
     skewed_partition_threshold: str = "64KB",
@@ -91,25 +83,19 @@ def with_aqe_skew_join(
     — the hot partition split across tasks at runtime, no salting, no
     manual replication.
     """
-    conf = spark.conf
-    keys = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": skewed_partition_threshold,
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": advisory_partition_size,
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": str(skew_factor),
-        # a large coalesce floor (tests set 1m to keep AQE quiet on tiny
-        # inputs) would re-merge the split partitions
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1KB",
-    }
-    old = {k: conf.get(k, None) for k in keys}
-    for k, v in keys.items():
-        conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            conf.unset(k) if v is None else conf.set(k, v)
+    return scoped_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.skewJoin.enabled": "true",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": skewed_partition_threshold,
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": advisory_partition_size,
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": str(skew_factor),
+            # a large coalesce floor (tests set 1m to keep AQE quiet on tiny
+            # inputs) would re-merge the split partitions
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1KB",
+        },
+    )
 
 
 def write_bucketed(

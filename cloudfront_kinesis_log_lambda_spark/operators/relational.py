@@ -32,60 +32,11 @@ from cloudfront_kinesis_log_lambda_spark.operators.util import (
     in_decimal_domain,
     in_ts_spine_domain,
 )
-
-
-#: marker conf: session already tuned by _tune_session (skip the RPCs)
-_TUNED = "spark.cloudfront_kinesis_log_lambda_spark.tuned"
-
-
-def _tune_session(spark: SparkSession) -> None:
-    """Apply the engine's runtime-settable confs to ANY session.
-
-    Callers (e.g. an external driver harness) may hand us a plain
-    ``SparkSession.builder.getOrCreate()`` session: shuffle.partitions
-    stuck at 200 and AQE off means every multi-stage query on small/
-    medium inputs pays ~200-task scheduling overhead per exchange —
-    measured 28 s vs ~3 s for the winnowing query at sf0.01. All of
-    these are runtime-settable SQLConfs, so the engine repairs the
-    session at first load rather than requiring its own session factory
-    (session.py sets the same values at build time and marks the
-    session tuned, so deliberate overrides like
-    SPARK_GRAFT_SHUFFLE_PARTITIONS survive this repair).
-
-    Timezone IS pinned to UTC: the naive TIMESTAMP_NTZ event data and
-    DuckDB's host-independent epoch math both behave as UTC, and the
-    reference's ``astimezone()`` attached the Lambda host zone — UTC.
-    On a non-UTC host an unpinned session would render windowed dates
-    and @timestamp strings hours off the oracle (and shift
-    non-uniformly across DST transitions).
-    """
-    if spark.conf.get(_TUNED, None):
-        return
-    try:
-        par = max(spark.sparkContext.defaultParallelism, 8)
-    except Exception:
-        # Spark Connect sessions expose no sparkContext; every conf set
-        # below is a plain runtime SQLConf that works there too
-        par = 8
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # events.parquet carries TIMESTAMP(NANOS), which a plain session
-    # rejects outright (PARQUET_TYPE_ILLEGAL)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", str(par))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # Arrow-optimized Python UDTF exchange: without it the UDTF surface
-    # is the registry's ONLY row-at-a-time BatchEvalPython node
-    # (PLAN_AUDIT.md); with it the chunker runs ArrowEvalPythonUDTF
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-    spark.conf.set(_TUNED, "true")
+from cloudfront_kinesis_log_lambda_spark.session import tune_session
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _tune_session(spark)
+    tune_session(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     # events.ts is parquet TIMESTAMP(NANOS); with nanosAsLong it arrives
     # as epoch-nanos. Integer-divide (DIV keeps long precision — a double

@@ -1,4 +1,10 @@
-"""SparkSession factory with engine-wide defaults.
+"""The engine's session confs: one table, applied at build and at repair.
+
+:data:`ENGINE_CONF` holds every runtime SQL conf the engine sets.
+:func:`get_spark` applies it when it builds a session. :func:`tune_session`
+applies it to a session built elsewhere, such as an external driver's
+plain ``SparkSession.builder.getOrCreate()``; ``relational.load`` calls it
+before every read, so any session works.
 
 Reproducibility requirements from the reference pipeline:
 
@@ -6,37 +12,68 @@ Reproducibility requirements from the reference pipeline:
   ``datetime.astimezone()`` on a naive CloudFront timestamp
   (cloudfront_kinesis_lambda.py:196-203), which attaches the *host* zone;
   on Lambda that host zone is UTC. Pinning the session zone makes the
-  engine deterministic everywhere (SURVEY.md §1.4.4).
+  engine deterministic everywhere (SURVEY.md §1.4.4), and DuckDB's
+  host-independent epoch math, which the oracles use, behaves as UTC.
 
-Scale defaults:
+The table does not restate Spark 4 defaults: AQE with partition
+coalescing and skew-join splitting, and parquet filter pushdown, are
+already on in a plain session.
 
-- AQE on (runtime coalescing, skew-join splitting) — at 100 TB the static
-  shuffle-partition count is always wrong for some stage; AQE re-plans.
-- Arrow on — every pandas UDF in the engine is Arrow-batched.
-- ``spark.sql.shuffle.partitions`` defaults to 32 to match the test
-  harness (local[32]); on a real cluster this should be ~2-3× total cores
-  and AQE coalesces down.
+Shuffle partitions are the one conf whose value depends on how the
+session was made:
+
+- a built session uses :data:`DEFAULT_SHUFFLE_PARTITIONS`, 32 unless
+  ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` says otherwise;
+- a repaired session uses ``max(defaultParallelism, 8)``.
+
+On a real cluster the count should be about 2-3× the total cores, and AQE
+coalesces it down.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
+#: runtime SQL confs every engine session carries
+ENGINE_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    # every pandas UDF in the engine is Arrow-batched
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Arrow-optimized Python UDTF exchange: without it the UDTF surface
+    # is the registry's ONLY row-at-a-time BatchEvalPython node
+    # (PLAN_AUDIT.md); with it the chunker runs ArrowEvalPythonUDTF
+    "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
+    # generous broadcast threshold: all dimension tables here are tiny,
+    # and at 100 TB the dims (region/nation/part metadata) still fit.
+    "spark.sql.autoBroadcastJoinThreshold": "64m",
+    # testdata events.ts is TIMESTAMP(NANOS), which a plain session
+    # rejects outright (PARQUET_TYPE_ILLEGAL): read it as long, converted
+    # to a proper timestamp in the loader (see relational.load)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+#: marker conf: the session already carries the engine confs, so
+#: :func:`tune_session` leaves it alone (and keeps deliberate choices made
+#: at build time, e.g. SPARK_GRAFT_SHUFFLE_PARTITIONS or ``extra_conf``)
+_TUNED = "spark.cloudfront_kinesis_log_lambda_spark.tuned"
+
 
 def get_spark(
     app_name: str = "cloudfront-kinesis-log-lambda-spark",
     master: str | None = None,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster leave it unset and let spark-submit supply it.
+    cluster leave it unset and let spark-submit supply it. ``extra_conf``
+    is applied last, so it overrides any engine default.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
@@ -47,35 +84,56 @@ def get_spark(
         builder = builder.master(master)
 
     conf = {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
-        # generous broadcast threshold: all dimension tables here are tiny,
-        # and at 100 TB the dims (region/nation/part metadata) still fit.
-        "spark.sql.autoBroadcastJoinThreshold": "64m",
-        "spark.sql.parquet.filterPushdown": "true",
-        # testdata events.ts is TIMESTAMP(NANOS): read as long, converted
-        # to a proper timestamp in the loader (see relational.load)
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # don't let tiny local runs spray hundreds of output files
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
+        **ENGINE_CONF,
+        "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
         "spark.ui.enabled": os.environ.get("SPARK_GRAFT_UI", "false"),
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        **(extra_conf or {}),
     }
-    if extra_conf:
-        conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # mark the session tuned: relational._tune_session repairs VANILLA
-    # sessions at first load, and without this marker it would clobber
-    # deliberate choices made here (e.g. shuffle_partitions /
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS) with its own defaults
-    spark.conf.set(
-        "spark.cloudfront_kinesis_log_lambda_spark.tuned", "true"
-    )
+    spark.conf.set(_TUNED, "true")
     return spark
+
+
+def tune_session(spark: SparkSession) -> None:
+    """Apply :data:`ENGINE_CONF` to a session that lacks it.
+
+    A plain session keeps Spark's 200 shuffle partitions, so every
+    multi-stage query on small or medium inputs pays about 200 tasks of
+    scheduling per exchange: measured 28 s against about 3 s for the
+    winnowing query at sf0.01. Every conf here is runtime-settable, so
+    the engine repairs the session instead of requiring its own factory.
+    Sessions from :func:`get_spark` carry the marker and are left as
+    built.
+    """
+    if spark.conf.get(_TUNED, None):
+        return
+    try:
+        par = max(spark.sparkContext.defaultParallelism, 8)
+    except AttributeError:
+        # Spark Connect sessions expose no sparkContext; every conf set
+        # below is a plain runtime SQLConf that works there too
+        par = 8
+    for k, v in {
+        **ENGINE_CONF,
+        "spark.sql.shuffle.partitions": str(par),
+        _TUNED: "true",
+    }.items():
+        spark.conf.set(k, v)
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the ``with`` block, then restore
+    each key: reset to its previous value, or unset if it had none."""
+    conf = spark.conf
+    old = {k: conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            conf.unset(k) if v is None else conf.set(k, v)

@@ -104,89 +104,27 @@ def put_records_with_retry(
       ≈ the reference's backoff ladder crossing its 600 s budget; beyond
       it the batch is dropped (at-least-once, drops possible — faithful
       to …:114-116).
-    - ``concurrency > 1`` overlaps puts within the partition with a small
-      thread pool — the reference's 25 asyncio consumers hiding PutRecords
+    - puts run on a pool of ``concurrency`` threads, at most one batch
+      each — the reference's 25 asyncio consumers hiding PutRecords
       latency (cloudfront_kinesis_lambda.py:74,93-122). boto3 clients are
-      thread-safe; at-most ``concurrency`` batches are in flight, so the
-      memory bound stays in-flight batches + failed records.
-    """
-    if concurrency > 1:
-        return _put_records_concurrent(
-            records, client, stream_name, max_attempts, sleep, batch_size, concurrency
-        )
-    stats = PutStats()
-    # Chunks are pulled LAZILY from the input iterator — the reference's
-    # bounded-queue producer (cloudfront_kinesis_lambda.py:219-220) never
-    # materialized the whole file either. Memory held here is one in-flight
-    # batch plus the retry stack (failed records only), not the partition.
-    chunks = chunked(records, batch_size)
-    retries: list[tuple[list[dict[str, Any]], int]] = []
-    while True:
-        if retries:
-            batch, attempt = retries.pop()
-        else:
-            batch = next(chunks, None)
-            if batch is None:
-                break
-            attempt = 0
-        if attempt >= max_attempts:
-            stats.dropped_records += len(batch)
-            continue
-        if attempt:
-            sleep(2**attempt * BACKOFF_BASE_S)
-        response = client.put_records(StreamName=stream_name, Records=batch)
-        stats.batches += 1
-        stats.records += len(batch)
-        stats.attempts_histogram[attempt] = stats.attempts_histogram.get(attempt, 0) + 1
-        failed = _failed_records(response, batch)
-        if failed:
-            stats.retried_records += len(failed)
-            retries.append((failed, attempt + 1))
-    return stats
-
-
-def _failed_records(
-    response: dict[str, Any], batch: list[dict[str, Any]]
-) -> list[dict[str, Any]]:
-    """Positional partial-failure extraction + rekey (the reference's
-    retry selection, cloudfront_kinesis_lambda.py:131-143)."""
-    if not response.get("FailedRecordCount"):
-        return []
-    failed = []
-    for i, result in enumerate(response["Records"]):
-        if result.get("ErrorCode"):
-            # copy, don't mutate: callers of the public retry API may
-            # hold references to their record dicts (audit, re-send) and
-            # must not see PartitionKey silently rewritten under them
-            failed.append({**batch[i], "PartitionKey": uuid.uuid4().hex})
-    return failed
-
-
-def _put_records_concurrent(
-    records: Iterable[dict[str, Any]],
-    client: Any,
-    stream_name: str,
-    max_attempts: int,
-    sleep: Callable[[float], None],
-    batch_size: int,
-    concurrency: int,
-) -> PutStats:
-    """Threaded variant of :func:`put_records_with_retry`: up to
-    ``concurrency`` batches in flight at once. Chunks are still pulled
-    lazily — a new chunk is consumed only when a pool slot frees up.
-
-    Semantics notes:
-
-    - backoff sleeps run INSIDE pool workers, so a burst of throttled
+      thread-safe. At ``concurrency=1`` the puts are sequential.
+    - chunks are pulled LAZILY from ``records``, and only when a pool
+      slot frees up; a retry is resubmitted before the next fresh chunk
+      is pulled. Memory held is the in-flight batches plus the failed
+      records, never the partition — the reference's bounded-queue
+      producer (cloudfront_kinesis_lambda.py:219-220) never materialized
+      the whole file either.
+    - backoff sleeps run INSIDE pool threads, so a burst of throttled
       batches can occupy every slot sleeping and stall fresh chunks until
       a retry completes. Deliberate: it bounds total in-flight work at
       ``concurrency`` batches, the same role the reference's
-      2×NUM_WORKERS queue cap plays (cloudfront_kinesis_lambda.py:219-220).
+      2×NUM_WORKERS queue cap plays.
     - a put error fails the whole Spark task (the shipping task's retry
       re-sends the partition → at-least-once, matching the reference);
       before re-raising, every already-completed future in the same wait
       set is drained so its retry work is submitted and counted — the
-      stats stay faithful to what was actually attempted.
+      stats stay faithful to what was actually attempted. The pool's
+      threads are joined before this function returns or raises.
     """
     stats = PutStats()
     lock = threading.Lock()
@@ -238,6 +176,23 @@ def _put_records_concurrent(
             if first_err is not None:
                 raise first_err  # → task fails → Spark re-runs the partition
     return stats
+
+
+def _failed_records(
+    response: dict[str, Any], batch: list[dict[str, Any]]
+) -> list[dict[str, Any]]:
+    """Positional partial-failure extraction + rekey (the reference's
+    retry selection, cloudfront_kinesis_lambda.py:131-143)."""
+    if not response.get("FailedRecordCount"):
+        return []
+    failed = []
+    for i, result in enumerate(response["Records"]):
+        if result.get("ErrorCode"):
+            # copy, don't mutate: callers of the public retry API may
+            # hold references to their record dicts (audit, re-send) and
+            # must not see PartitionKey silently rewritten under them
+            failed.append({**batch[i], "PartitionKey": uuid.uuid4().hex})
+    return failed
 
 
 def _default_client_factory(region_name: str | None = None) -> Callable[[], Any]:

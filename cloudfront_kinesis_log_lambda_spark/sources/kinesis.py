@@ -159,7 +159,7 @@ class FakeKinesisDataPlane:
         import zlib
 
         # group per shard and append each shard's chunk in ONE write():
-        # concurrent sink partitions (parallelism=25 / io_concurrency)
+        # concurrent shipping tasks (and io_concurrency threads)
         # append to the same files, and single-write appends in O_APPEND
         # mode don't interleave in practice — per-record open/write
         # would both churn syscalls and risk torn lines for large

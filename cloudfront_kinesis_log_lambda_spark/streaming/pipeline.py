@@ -207,74 +207,6 @@ def running_user_totals(
     )
 
 
-def running_user_totals_tws(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    ttl_minutes: int | None = None,
-) -> DataFrame:
-    """The same per-key running totals as :func:`running_user_totals`,
-    through Spark 4's ``transformWithStateInPandas`` — the successor
-    stateful API (SPARK-49564 "State V2"): typed state handles
-    (ValueState here) instead of a single opaque tuple, per-state TTL
-    instead of whole-key timeouts, and a processor object whose
-    ``init``/``handleInputRows`` lifecycle the engine manages. Kept
-    alongside the applyInPandasWithState formulation so both stateful
-    surfaces stay exercised; equivalence is pinned in test_streaming.
-
-    State per key is one (count, sum) ValueState row → store size is
-    O(distinct keys); ``ttl_minutes`` bounds it for unbounded key
-    universes (processing-time TTL, the 100 TB safety valve).
-
-    ENVIRONMENT GATE: the State V2 Python runner speaks protobuf to its
-    JVM-side state server; in environments without a working
-    ``google.protobuf`` this raises ImportError at CONSTRUCTION (not as
-    a mid-stream worker crash) — callers fall back to
-    :func:`running_user_totals`. The test suite skips accordingly.
-    """
-    import pandas as pd  # noqa: PLC0415 — executor-side import
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf (State V2 "
-            "runner protocol); use running_user_totals "
-            "(applyInPandasWithState) in this environment"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    key_type = dict(events.dtypes)[key_col]
-    out_schema = f"{key_col} {key_type}, n_events long, total_value double"
-    ttl_ms = ttl_minutes * 60 * 1000 if ttl_minutes else None
-
-    class Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n long, s double", ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += int(len(pdf))
-                s += float(pdf[value_col].sum())
-            self._state.update((n, s))
-            yield pd.DataFrame(
-                {key_col: [key[0]], "n_events": [n], "total_value": [round(s, 2)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        Totals(), out_schema, "Update", "None"
-    )
-
-
 def stream_stream_interval_join(
     left: DataFrame,
     right: DataFrame,

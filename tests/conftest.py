@@ -61,9 +61,11 @@ def spark():
         # tools/run_suite_sharded.py splits the box's cores across
         # concurrent shard JVMs; a lone pytest keeps every core
         master=os.environ.get("CFKLL_TEST_MASTER", "local[*]"),
-        shuffle_partitions=32,
-        # tiny inputs: stop codegen/AQE from being the bottleneck in tests
-        extra_conf={"spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m"},
+        extra_conf={
+            "spark.sql.shuffle.partitions": "32",
+            # tiny inputs: stop codegen/AQE from being the bottleneck in tests
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m",
+        },
     )
     yield spark
 

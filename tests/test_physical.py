@@ -14,7 +14,7 @@ from cloudfront_kinesis_log_lambda_spark.operators.physical import (
 
 @pytest.fixture()
 def no_broadcast(spark, sf_dir):
-    # force _tune_session to run BEFORE we pin the threshold: the first
+    # force tune_session to run BEFORE we pin the threshold: the first
     # load() in a session applies the engine confs (incl. a 64m broadcast
     # threshold), which would silently undo the -1 below if this test
     # happened to be the session's first load (order-dependent failure
@@ -201,6 +201,24 @@ def test_aqe_splits_skewed_join_partition_at_runtime(spark, sf_dir, no_broadcast
 
     hot = Counter(r["k"] for r in rows)[0]
     assert hot == 180000  # the 90% key, intact across the split tasks
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    """``scoped_conf`` puts back a key that had a value and unsets a key
+    that had none, also when the block raises."""
+    from cloudfront_kinesis_log_lambda_spark.session import scoped_conf
+
+    set_key = "spark.sql.autoBroadcastJoinThreshold"
+    unset_key = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {set_key: "-1", unset_key: "7"}):
+            assert spark.conf.get(set_key) == "-1"
+            assert spark.conf.get(unset_key) == "7"
+            raise RuntimeError
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
 
 
 def test_salted_join_refuses_right_shaped_joins(spark):

@@ -231,47 +231,3 @@ def test_sliding_window_streaming(spark, tmp_path):
         ("2024-01-01 00:00:00", 2, 3.0),   # covers [00:00, 00:10) → both
         ("2024-01-01 00:05:00", 1, 2.0),   # covers [00:05, 00:15) → event 2
     }
-
-
-def test_running_user_totals_tws_matches_state_v1(spark, tmp_path):
-    """transformWithStateInPandas (State V2) twin: totals accumulate
-    across micro-batches and the final per-key values equal the
-    applyInPandasWithState formulation's on the same stream. Skips
-    where the State V2 runner's protobuf dependency is absent (this
-    container) — the operator's import gate raises at construction."""
-    import pytest
-
-    from cloudfront_kinesis_log_lambda_spark.streaming.pipeline import (
-        running_user_totals_tws,
-    )
-
-    land = str(tmp_path / "tws")
-    _write_batch(land, "b0.json", [
-        {"event_id": 1, "ts": "2024-01-01 00:00:00", "user_id": 1, "event_type": "a", "value": 1.0},
-        {"event_id": 2, "ts": "2024-01-01 00:01:00", "user_id": 1, "event_type": "a", "value": 2.0},
-        {"event_id": 3, "ts": "2024-01-01 00:02:00", "user_id": 2, "event_type": "b", "value": 5.0},
-    ])
-    stream = spark.readStream.option("maxFilesPerTrigger", 1).schema(EVENT_SCHEMA).json(land)
-    try:
-        totals = running_user_totals_tws(stream)
-    except ImportError as e:
-        pytest.skip(f"State V2 runner unavailable here: {e}")
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("totals_tws")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt-tws"))
-        .start()
-    )
-    q.processAllAvailable()
-    _write_batch(land, "b1.json", [
-        {"event_id": 4, "ts": "2024-01-01 00:03:00", "user_id": 1, "event_type": "a", "value": 4.0},
-    ])
-    q.processAllAvailable()
-    rows = spark.sql("SELECT * FROM totals_tws").collect()
-    q.stop()
-    latest = {}
-    for r in rows:
-        latest[r["user_id"]] = (r["n_events"], r["total_value"])
-    assert latest[1] == (3, 7.0)
-    assert latest[2] == (1, 5.0)

@@ -52,6 +52,67 @@ def test_load_works_on_plain_session():
     assert "VANILLA_OK" in proc.stdout, proc.stdout
 
 
+_CONF_SCRIPT = r"""
+import json
+import sys
+
+from pyspark.sql import SparkSession
+
+from cloudfront_kinesis_log_lambda_spark.operators.relational import load
+from cloudfront_kinesis_log_lambda_spark.session import ENGINE_CONF, get_spark
+
+keys = [*ENGINE_CONF, *json.loads(sys.argv[2]), "spark.sql.shuffle.partitions"]
+plain = SparkSession.builder.master("local[4]").getOrCreate()
+load(plain, sys.argv[1], "region")
+repaired = {k: plain.conf.get(k) for k in keys}
+plain.stop()
+built = get_spark(master="local[4]")
+print(json.dumps({"repaired": repaired, "built": {k: built.conf.get(k) for k in keys}}))
+built.stop()
+"""
+
+#: confs the engine relies on that Spark's own defaults already provide,
+#: so ENGINE_CONF does not set them
+_SPARK_DEFAULTS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "67108864b",
+}
+
+
+def test_built_and_repaired_sessions_share_engine_conf(sf_dir):
+    """One conf table: a ``get_spark`` session and a plain session after
+    ``load()`` read the same value for every ``ENGINE_CONF`` key and for
+    every Spark default the engine relies on. Shuffle partitions are the
+    one difference: 32 when built, ``max(defaultParallelism, 8)`` when
+    repaired. Both sessions run in one subprocess, one after the other,
+    because builder confs leak between sessions of one JVM."""
+    import json
+    import os
+    from pathlib import Path
+
+    from cloudfront_kinesis_log_lambda_spark.session import ENGINE_CONF
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_SHUFFLE_PARTITIONS"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _CONF_SCRIPT, sf_dir, json.dumps(list(_SPARK_DEFAULTS))],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=Path(__file__).resolve().parents[1],
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    expected = {**ENGINE_CONF, **_SPARK_DEFAULTS}
+    for session in ("built", "repaired"):
+        assert {k: got[session][k] for k in expected} == expected, session
+    assert got["built"]["spark.sql.shuffle.partitions"] == "32"
+    assert got["repaired"]["spark.sql.shuffle.partitions"] == str(max(4, 8))
+
+
 def test_time_bucketing_is_session_timezone_independent(spark, sf_dir):
     """r13 adversarial probe, pinned (VERDICT r12 item 7): the full
     time-centric oracle surface came back byte-identical under
