@@ -19,15 +19,13 @@ The table does not restate Spark 4 defaults: AQE with partition
 coalescing and skew-join splitting, and parquet filter pushdown, are
 already on in a plain session.
 
-Shuffle partitions are the one conf whose value depends on how the
-session was made:
-
-- a built session uses :data:`DEFAULT_SHUFFLE_PARTITIONS`, 32 unless
-  ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` says otherwise;
-- a repaired session uses ``max(defaultParallelism, 8)``.
-
-On a real cluster the count should be about 2-3× the total cores, and AQE
-coalesces it down.
+Shuffle partitions follow one rule, ``max(defaultParallelism, 8)``, set
+at runtime once the context exists, by :func:`tune_session` and, on a
+local master, by :func:`get_spark`. On a cluster ``defaultParallelism``
+right after ``getOrCreate()`` counts only the executors registered so
+far, so a built session leaves the count to ``extra_conf`` or
+``spark-submit --conf`` (about 2-3× the total cores). A stream's state
+store keeps the count its checkpoint recorded when the query first ran.
 """
 
 from __future__ import annotations
@@ -37,8 +35,6 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
 #: runtime SQL confs every engine session carries
 ENGINE_CONF = {
@@ -59,8 +55,8 @@ ENGINE_CONF = {
 }
 
 #: marker conf: the session already carries the engine confs, so
-#: :func:`tune_session` leaves it alone (and keeps deliberate choices made
-#: at build time, e.g. SPARK_GRAFT_SHUFFLE_PARTITIONS or ``extra_conf``)
+#: :func:`tune_session` leaves it alone and :func:`get_spark` keeps its
+#: shuffle-partition count (a deliberate one, e.g. from ``extra_conf``)
 _TUNED = "spark.cloudfront_kinesis_log_lambda_spark.tuned"
 
 
@@ -85,7 +81,6 @@ def get_spark(
 
     conf = {
         **ENGINE_CONF,
-        "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
         "spark.ui.enabled": os.environ.get("SPARK_GRAFT_UI", "false"),
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         **(extra_conf or {}),
@@ -93,6 +88,9 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    chosen = "spark.sql.shuffle.partitions" in conf or spark.conf.get(_TUNED, None)
+    if not chosen and spark.conf.get("spark.master", "").startswith("local"):
+        spark.conf.set("spark.sql.shuffle.partitions", _shuffle_partitions(spark))
     spark.conf.set(_TUNED, "true")
     return spark
 
@@ -110,18 +108,20 @@ def tune_session(spark: SparkSession) -> None:
     """
     if spark.conf.get(_TUNED, None):
         return
-    try:
-        par = max(spark.sparkContext.defaultParallelism, 8)
-    except AttributeError:
-        # Spark Connect sessions expose no sparkContext; every conf set
-        # below is a plain runtime SQLConf that works there too
-        par = 8
     for k, v in {
         **ENGINE_CONF,
-        "spark.sql.shuffle.partitions": str(par),
+        "spark.sql.shuffle.partitions": _shuffle_partitions(spark),
         _TUNED: "true",
     }.items():
         spark.conf.set(k, v)
+
+
+def _shuffle_partitions(spark: SparkSession) -> str:
+    """One task per core, at least 8."""
+    try:
+        return str(max(spark.sparkContext.defaultParallelism, 8))
+    except AttributeError:  # Spark Connect sessions expose no sparkContext
+        return "8"
 
 
 @contextmanager

@@ -22,7 +22,8 @@ Spark-first translation:
   to race; we cap attempts instead (``max_attempts``), defaulting to the
   point where the reference's own backoff passes its 600 s budget.
   Records given up on are counted: :meth:`KinesisSink.write` returns the
-  summed :class:`PutStats` of every shipping task.
+  summed :class:`PutStats` of every shipping task, and the
+  ``foreachBatch`` entry keeps their running total in ``KinesisSink.totals``.
 - delivery is at-least-once, like the reference: a retried task re-ships
   its whole partition. Exactly-once upgrade:
   make the consumer idempotent on ``cf_request_id`` (SURVEY.md §2.5).
@@ -310,6 +311,10 @@ class KinesisSink:
     PutRecords latency, which ``io_concurrency`` does *within* each task
     — total in-flight puts = tasks × io_concurrency — without paying the
     fixed per-Python-task cost 25 times.
+
+    As a ``foreachBatch`` function the sink adds each batch's
+    :class:`PutStats` counters into :attr:`totals` on the driver, dropped
+    records included.
     """
 
     def __init__(
@@ -326,6 +331,19 @@ class KinesisSink:
         self.max_attempts = max_attempts
         self.client_factory = client_factory or _default_client_factory(region_name)
         self.io_concurrency = io_concurrency
+        #: counters summed over every ``foreachBatch`` call so far
+        self.totals = PutStats()
+        self._totals_lock = threading.Lock()
+
+    def __getstate__(self) -> dict:
+        # a lock cannot be pickled, and Spark Connect pickles a
+        # foreachBatch function to run it on the server
+        state = dict(self.__dict__)
+        del state["_totals_lock"]
+        return state
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state, _totals_lock=threading.Lock())
 
     def write(self, df: DataFrame) -> PutStats:
         """Ship every row of ``df`` (columns ``Data`` and ``PartitionKey``)
@@ -375,5 +393,10 @@ class KinesisSink:
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch entry point."""
-        self.write(batch_df)
+        """foreachBatch entry point: ship the batch and add its counters to
+        :attr:`totals` (one sink may serve several queries at once)."""
+        stats = self.write(batch_df)
+        with self._totals_lock:
+            for name in _STATS_COUNTS:
+                total = getattr(self.totals, name) + getattr(stats, name)
+                setattr(self.totals, name, total)

@@ -70,6 +70,8 @@ def write_log_store(
         # passed EXPLICITLY: a bare repartition(cols) is fair game for
         # AQE partition coalescing, which at small volume merges every
         # salt bucket back into one task — silently undoing the split.
+        # The count is the session's shuffle-partition count, which
+        # session.py sizes to one task per core, at least 8.
         salt = F.pmod(F.xxhash64(F.col("ts")), F.lit(target_file_partitions))
         n_tasks = int(
             enriched.sparkSession.conf.get("spark.sql.shuffle.partitions")

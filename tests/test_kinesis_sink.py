@@ -308,6 +308,23 @@ def test_assume_role_factory_never_pickles_grant():
     assert clone._creds is None
 
 
+def test_sink_pickles_with_its_totals():
+    """Spark Connect pickles a ``foreachBatch`` function to run it on the
+    server: a sink round-trips, keeps its running totals and gets a lock
+    of its own."""
+    from pyspark import cloudpickle as pickle  # what Spark actually uses
+
+    from cloudfront_kinesis_log_lambda_spark.sinks.kinesis import PutStats
+
+    sink = KinesisSink("s", parallelism=2, client_factory=FakeKinesis)
+    sink.totals = PutStats(batches=3, records=7, dropped_records=1)
+    clone = pickle.loads(pickle.dumps(sink))
+    assert clone.totals == sink.totals
+    assert clone.parallelism == 2
+    with clone._totals_lock:
+        assert clone._totals_lock is not sink._totals_lock
+
+
 def test_sink_with_assume_role_factory_delivers(spark, tmp_path):
     """End to end through the sink seam: KinesisSink(client_factory=
     AssumeRoleClientFactory(...)) ships every record using STS-derived
@@ -450,3 +467,65 @@ def test_sink_write_reports_dropped_records(spark):
     assert stats.dropped_records == 30
     assert stats.records == 60 and stats.retried_records == 60
     assert stats.batches == 4  # two tasks × attempts 0 and 1
+
+
+def test_foreach_batch_keeps_running_totals(spark, tmp_path):
+    """Two foreachBatch calls into a file-backed data plane that rejects
+    some records for good: ``sink.totals`` is the sum of the two
+    ``write()`` results, dropped records included, and the plane holds
+    exactly the accepted records."""
+    import json
+    from glob import glob
+
+    from cloudfront_kinesis_log_lambda_spark.sinks.kinesis import PutStats
+    from cloudfront_kinesis_log_lambda_spark.sources.kinesis import (
+        FakeKinesisDataPlane,
+    )
+
+    out_dir = str(tmp_path / "plane")
+
+    class RejectingPlane(FakeKinesisDataPlane):  # rejects every "x…" record
+        def __init__(self):
+            super().__init__(out_dir, n_shards=2)
+
+        def put_records(self, StreamName, Records):
+            ok = [r for r in Records if not r["Data"].startswith("x")]
+            if ok:
+                super().put_records(StreamName, ok)
+            return {
+                "FailedRecordCount": len(Records) - len(ok),
+                "Records": [
+                    {"ErrorCode": "InternalFailure"} if r["Data"].startswith("x") else {}
+                    for r in Records
+                ],
+            }
+
+    sink = KinesisSink("s", parallelism=2, max_attempts=2, client_factory=RejectingPlane)
+    results = []
+    write = sink.write
+    sink.write = lambda df: results.append(write(df)) or results[-1]
+    batches = [
+        spark.createDataFrame(
+            [(f"{'x' if i % 4 == 0 else 'd'}{b}-{i}", f"{i:032d}") for i in range(n)],
+            "Data string, PartitionKey string",
+        ).repartition(2)
+        for b, n in ((0, 40), (1, 20))
+    ]
+    for batch_id, df in enumerate(batches):
+        sink(df, batch_id)
+
+    assert len(results) == 2
+    assert sink.totals == PutStats(
+        **{
+            name: sum(getattr(r, name) for r in results)
+            for name in ("batches", "records", "retried_records", "dropped_records")
+        }
+    )
+    assert sink.totals.dropped_records == 10 + 5
+    delivered = sorted(
+        json.loads(line)["Data"]
+        for p in glob(f"{out_dir}/shard-*.jsonl")
+        for line in open(p)
+    )
+    assert len(delivered) == 30 + 15
+    assert not any(d.startswith("x") for d in delivered)

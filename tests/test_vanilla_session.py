@@ -15,10 +15,12 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+#: subprocesses run from this checkout's root, so they import its package
+_ROOT = Path(__file__).resolve().parents[1]
 
 _SCRIPT = r"""
-import sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 
 spark = (
@@ -47,6 +49,7 @@ def test_load_works_on_plain_session():
         capture_output=True,
         text=True,
         timeout=300,
+        cwd=_ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "VANILLA_OK" in proc.stdout, proc.stdout
@@ -57,9 +60,11 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from cloudfront_kinesis_log_lambda_spark.operators.relational import load
 from cloudfront_kinesis_log_lambda_spark.session import ENGINE_CONF, get_spark
+from cloudfront_kinesis_log_lambda_spark.streaming.pipeline import tumbling_event_counts
 
 keys = [*ENGINE_CONF, *json.loads(sys.argv[2]), "spark.sql.shuffle.partitions"]
 plain = SparkSession.builder.master("local[4]").getOrCreate()
@@ -67,8 +72,32 @@ load(plain, sys.argv[1], "region")
 repaired = {k: plain.conf.get(k) for k in keys}
 plain.stop()
 built = get_spark(master="local[4]")
-print(json.dumps({"repaired": repaired, "built": {k: built.conf.get(k) for k in keys}}))
+got = {"repaired": repaired, "built": {k: built.conf.get(k) for k in keys}}
+events = (
+    built.readStream.format("rate-micro-batch")
+    .option("rowsPerBatch", 60)
+    .option("startTimestamp", 1704067200000)
+    .load()
+    .select(
+        F.col("timestamp").alias("ts"),
+        (F.col("value") % 3).cast("string").alias("event_type"),
+    )
+)
+q = (
+    tumbling_event_counts(events)
+    .writeStream.format("memory")
+    .queryName("counts")
+    .outputMode("complete")
+    .trigger(availableNow=True)
+    .start()
+)
+assert q.awaitTermination(240), "stream did not finish"
+got["state_partitions"] = q.lastProgress["stateOperators"][0]["numShufflePartitions"]
 built.stop()
+wide = get_spark(master="local[32]")
+got["local32"] = wide.conf.get("spark.sql.shuffle.partitions")
+print(json.dumps(got))
+wide.stop()
 """
 
 #: confs the engine relies on that Spark's own defaults already provide,
@@ -85,32 +114,31 @@ _SPARK_DEFAULTS = {
 def test_built_and_repaired_sessions_share_engine_conf(sf_dir):
     """One conf table: a ``get_spark`` session and a plain session after
     ``load()`` read the same value for every ``ENGINE_CONF`` key and for
-    every Spark default the engine relies on. Shuffle partitions are the
-    one difference: 32 when built, ``max(defaultParallelism, 8)`` when
-    repaired. Both sessions run in one subprocess, one after the other,
+    every Spark default the engine relies on, and the same shuffle-partition
+    count, ``max(defaultParallelism, 8)``, which the built session's
+    stateful stream takes for its state store; a ``local[32]`` session
+    still gets 32. The sessions run in one subprocess, one after the other,
     because builder confs leak between sessions of one JVM."""
     import json
-    import os
-    from pathlib import Path
 
     from cloudfront_kinesis_log_lambda_spark.session import ENGINE_CONF
 
-    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_SHUFFLE_PARTITIONS"}
     proc = subprocess.run(
         [sys.executable, "-c", _CONF_SCRIPT, sf_dir, json.dumps(list(_SPARK_DEFAULTS))],
         capture_output=True,
         text=True,
         timeout=300,
-        cwd=Path(__file__).resolve().parents[1],
-        env=env,
+        cwd=_ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     got = json.loads(proc.stdout.strip().splitlines()[-1])
     expected = {**ENGINE_CONF, **_SPARK_DEFAULTS}
     for session in ("built", "repaired"):
         assert {k: got[session][k] for k in expected} == expected, session
-    assert got["built"]["spark.sql.shuffle.partitions"] == "32"
+    assert got["built"]["spark.sql.shuffle.partitions"] == str(max(4, 8))
     assert got["repaired"]["spark.sql.shuffle.partitions"] == str(max(4, 8))
+    assert got["state_partitions"] == 8
+    assert got["local32"] == "32"
 
 
 def test_time_bucketing_is_session_timezone_independent(spark, sf_dir):
