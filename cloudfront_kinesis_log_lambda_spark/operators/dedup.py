@@ -25,22 +25,14 @@ DuckDB-checkable oracle twin; MinHash/SimHash results are hash-dependent
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cloudfront_kinesis_log_lambda_spark.operators.util import ensure_parallelism
-
-#: r15 (guide §3.1): broadcast gate for the connected-components label
-#: joins — measured node count from the already-checkpointed label
-#: table, not a size estimate. 2 M (node, label) longs ≈ 32 MB data,
-#: comfortably inside the broadcast envelope; env-tunable. Above the
-#: gate every round keeps its sort-merge formulation.
-CC_BROADCAST_MAX_NODES = int(
-    os.environ.get("SPARK_GRAFT_CC_BROADCAST_MAX_NODES", "2000000")
+from cloudfront_kinesis_log_lambda_spark.operators.util import (
+    ensure_parallelism,
+    fits_broadcast,
 )
 
 #: Mersenne prime 2^31-1: universal-hash modulus. a·h+b with a,b,h < p
@@ -530,17 +522,19 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     propagation.
 
     r15 join strategy (guide §3.1, the operators/graph.py gate): when
-    the measured node count fits ``CC_BROADCAST_MAX_NODES``, every
-    per-round join against a ≤|V|-row label table is an explicit
+    the measured node count × 16 B (a (node, label) pair of longs)
+    fits the session's ``autoBroadcastJoinThreshold``
+    (``util.fits_broadcast``), every per-round join against a
+    ≤|V|-row label table is an explicit
     BROADCAST — the checkpointed inputs carry no statistics, so each
     round otherwise planned 4 SortMergeJoins (edge-join, propagate,
     jump, changed-count) = 7-8 exchanges of tiny tables per round.
     Broadcasting leaves one exchange per round (the groupBy(u)
     neighbor-min — fundamental). Join strategy only: labels only ever
     decrease through the SAME least/coalesce lattice, so the fixpoint
-    and every intermediate labeling are unchanged. Above the gate the
-    sort-merge formulation stands (a 100 TB doc graph's label table
-    does not broadcast).
+    and every intermediate labeling are unchanged. Above the threshold,
+    or with broadcasts off (-1), the sort-merge formulation stands (a
+    100 TB doc graph's label table does not broadcast).
     """
     edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     edges = edges.union(
@@ -553,13 +547,14 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     # Driver-memory note (ADVICE r15): broadcast mode builds up to three
-    # ≤gate-row broadcast relations per round, reclaimed lazily by the
+    # ≤threshold broadcast relations per round, reclaimed lazily by the
     # ContextCleaner rather than eagerly per round (the DataFrame API
     # exposes no handle to destroy a BroadcastExchange's relation). At
-    # the default 2M-node gate that is tens of MB per round across ≤25
-    # rounds — bounded, but a small-driver deployment should lower
-    # SPARK_GRAFT_CC_BROADCAST_MAX_NODES rather than rely on GC timing.
-    small = labels.count() <= CC_BROADCAST_MAX_NODES
+    # the engine's 64m threshold that is up to three 64 MiB-of-data
+    # relations per round across ≤25 rounds — bounded, but a
+    # small-driver deployment should lower the session's
+    # spark.sql.autoBroadcastJoinThreshold rather than rely on GC timing.
+    small = fits_broadcast(labels.sparkSession, labels.count(), 16)
     bcast = F.broadcast if small else (lambda df: df)
     for _ in range(max_iter):
         nbr = (

@@ -21,35 +21,16 @@ agree within float noise.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloudfront_kinesis_log_lambda_spark.operators.dedup import ordered_pairs
 from cloudfront_kinesis_log_lambda_spark.operators.relational import load
+from cloudfront_kinesis_log_lambda_spark.operators.util import fits_broadcast
 
 PAGERANK_ITERS = 10
 PAGERANK_DAMPING = 0.85
 PAGERANK_ROUND = 12
-
-#: r15 optimization gates (guide §3.1: pick the join strategy
-#: deliberately — broadcast the side that FITS, shuffle otherwise).
-#: Both are measured row counts collected from already-materialized
-#: inputs (one tiny aggregate each), not size estimates, so the gate
-#: can't be fooled by a localCheckpoint's unknown statistics. The
-#: defaults keep the broadcast relation in the tens-of-MB range
-#: (2 M ranks ≈ 32 MB of (long, double); 2 M oriented edges ≈ 48 MB of
-#: 3 longs) — inside the "few hundred MB is fine" broadcast envelope
-#: with full headroom on the 8 GB driver; env-tunable for clusters
-#: with bigger or smaller drivers. Above the gate the operators keep
-#: their shuffle formulation — correct at any scale.
-PAGERANK_BROADCAST_MAX_NODES = int(
-    os.environ.get("SPARK_GRAFT_PAGERANK_BROADCAST_MAX_NODES", "2000000")
-)
-TRIANGLE_BROADCAST_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_TRIANGLE_BROADCAST_MAX_EDGES", "2000000")
-)
 
 
 def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,8 +82,9 @@ def pagerank(
     flaky-executor environments where recompute-on-retry matters more.
 
     r15 (guide §3.1/§2.4): when the node spine is small (measured
-    count ≤ ``PAGERANK_BROADCAST_MAX_NODES``), the per-sweep rank and
-    contribution-sum tables — both ≤ |V| rows — join BROADCAST-side.
+    count × 16 B fits the session's ``autoBroadcastJoinThreshold``, see
+    ``util.fits_broadcast``), the per-sweep rank and contribution-sum
+    tables — both ≤ |V| rows — join BROADCAST-side.
     The checkpointed inputs carry no size statistics, so without the
     explicit hint Catalyst planned every sweep's two joins as
     SortMergeJoin: 2 exchanges + 2 sorts per sweep of a ≤|V|-row
@@ -110,8 +92,9 @@ def pagerank(
     (the groupBy(dst) contribution shuffle — fundamental to the
     algorithm). Join strategy only; the fold arithmetic and the sweep
     trajectory are bit-identical (A/B'd at sf0.1: equal collect()
-    output, 2.72 s → 2.21 s for the 10-sweep loop). Above the gate
-    (web-scale graphs) the shuffle formulation stands.
+    output, 2.72 s → 2.21 s for the 10-sweep loop). Above the
+    threshold (web-scale graphs), or with broadcasts off (-1), the
+    shuffle formulation stands.
     """
     edges = edges.localCheckpoint(eager=True)
     nodes = (
@@ -120,7 +103,8 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    small = nodes.count() <= PAGERANK_BROADCAST_MAX_NODES
+    # the broadcast tables are ≤|V| rows of (long, double)
+    small = fits_broadcast(edges.sparkSession, nodes.count(), 16)
     bcast = F.broadcast if small else (lambda df: df)
     deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("double").alias("deg")
@@ -279,19 +263,20 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     reference. The adjacency arrays stay bounded by orientation
     (out-degree ≤ 2√m), so no row ever carries more than O(√m) longs.
 
-    Join strategy (guide §3.1, r15 gate kept): when the measured edge
-    count is ≤ ``TRIANGLE_BROADCAST_MAX_EDGES``, the degree and
-    adjacency attachments broadcast (the adjacency relation totals |E|
-    longs — 2 M edges ≈ 16 MB); above the gate they fall back to
-    shuffle joins keyed on s / t, which ship each edge row with one
-    bounded O(√m) array — still nothing O(m^1.5). The gating probe is
-    one tiny count over the checkpointed edges, not a size estimate.
+    Join strategy (guide §3.1): when the measured edge count × 24 B
+    fits the session's ``autoBroadcastJoinThreshold`` (64m under the
+    engine's conf: ≈ 2.8 M edges; see ``util.fits_broadcast``), the
+    degree and adjacency attachments broadcast (the adjacency relation
+    totals |E| longs); above it, or with broadcasts off (-1), they
+    fall back to shuffle joins keyed on s / t, which ship each edge
+    row with one bounded O(√m) array — still nothing O(m^1.5). The
+    gating probe is one tiny count over the checkpointed edges, not a
+    size estimate.
     """
     edges = edges.localCheckpoint(eager=True)
     # broadcast-gate probe: one measured count over the materialized
     # edge list (estimates can't be fooled — there are none involved)
-    n_edges = edges.count()
-    small = n_edges <= TRIANGLE_BROADCAST_MAX_EDGES
+    small = fits_broadcast(edges.sparkSession, edges.count(), 24)
     bcast = F.broadcast if small else (lambda df: df)
     # deg feeds the orientation joins AND the final output row — two
     # full union+aggregate passes over the edge list without the pin

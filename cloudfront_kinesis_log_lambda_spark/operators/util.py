@@ -2,8 +2,26 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import re
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
+
+
+def fits_broadcast(spark: SparkSession, rows: int, row_bytes: int) -> bool:
+    """True iff ``rows`` measured rows of ``row_bytes`` each fit the
+    session's ``spark.sql.autoBroadcastJoinThreshold``; never when it is
+    negative (broadcasts off). For joins over checkpointed inputs, which
+    carry no size statistics for Catalyst to apply the threshold to.
+    Spark reports the conf as set (``64m``) or with a byte suffix
+    (``10485760b``); a bare number means bytes."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower()
+    m = re.fullmatch(r"(-?)(\d+)([kmgtp]?)b?", raw)
+    if m is None:
+        raise ValueError(f"unparseable autoBroadcastJoinThreshold: {raw!r}")
+    return not m.group(1) and rows * row_bytes <= int(m.group(2)) * _BYTE_UNITS[m.group(3)]
 
 
 def finite(c: Column) -> Column:

@@ -13,14 +13,14 @@ Spark-extension candidate — this module is it:
   executors — shard count is the parallelism unit, exactly like the
   real connector.
 - The streaming side has BOTH stream-reader tiers of the DataSource
-  API. The default is the partitioned ``DataSourceStreamReader``:
+  API, and the shard client picks between them. A client with the
+  shard-tip pair (``latest_position`` + ``bound_advance``; the
+  file-backed fake) gets the partitioned ``DataSourceStreamReader``:
   the driver only plans {shard → (start, end)} ranges; record bytes
-  flow on the EXECUTORS, one task per shard — the 100 TB shape.
-  Requires a data plane that can report a shard tip
-  (``latest_position``); the file-backed fake can, AWS's API cannot
-  in O(1), so ``simple_reader=true`` selects the
-  ``SimpleDataSourceStreamReader`` fallback (driver-side prefetch +
-  ``readBetweenOffsets`` replay), the right fit for boto3 at moderate
+  flow on the EXECUTORS, one task per shard — the 100 TB shape. A
+  client without it (boto3: AWS's API has no O(1) shard tip) gets the
+  ``SimpleDataSourceStreamReader`` (driver-side prefetch +
+  ``readBetweenOffsets`` replay), the right fit at moderate
   throughput. Offsets ({shard → position token}) are identical in
   both tiers, so a checkpoint survives switching.
 
@@ -301,6 +301,14 @@ def _make_client(options: dict) -> FakeShardClient | Boto3ShardClient:
     return Boto3ShardClient(options["stream_name"], options.get("region"))
 
 
+def _max_per_shard(options: dict, default: int) -> int | None:
+    """The ``max_records_per_shard`` cap, ``None`` when uncapped (0).
+    The shard clients check their limit after appending, so a literal
+    limit of 0 would crawl at one record per shard per trigger."""
+    cap = int(options.get("max_records_per_shard", default))
+    return cap if cap > 0 else None
+
+
 #: rows per Arrow RecordBatch yielded by the executor-side readers —
 #: large enough to amortize per-batch overhead, small enough to bound
 #: worker memory for fat Data payloads (guide §4.2's batch-size rule)
@@ -379,38 +387,30 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
     driver, so throughput scales with shards × executors (the 100 TB
     shape; the Simple reader funnels every byte through the driver).
 
-    Needs ``latest_position`` from the shard client. The file-backed
-    fake provides it; ``Boto3ShardClient`` deliberately does not (AWS
-    exposes no O(1) shard-tip lookup) — production over boto3 opts into
-    the Simple reader via ``simple_reader=true``.
+    Needs the shard-tip pair (``latest_position``, ``bound_advance``);
+    ``KinesisPyDataSource.streamReader`` picks this reader only for a
+    client that has it — the file-backed fake, not ``Boto3ShardClient``
+    (AWS exposes no O(1) shard-tip lookup).
     """
 
     def __init__(self, options: dict) -> None:
         self.options = options
         self.client = _make_client(options)
-        self.max_per_shard = int(options.get("max_records_per_shard", "0"))
+        self.max_per_shard = _max_per_shard(options, 0)
         #: last planned end offsets — the admission-control baseline.
-        #: None until the first partitions() call reveals the true
-        #: consumer position (fresh start OR checkpoint restore).
+        #: None until initialOffset() or the first partitions() call
+        #: reveals the true consumer position.
         self._last_end: dict | None = None
-        if not hasattr(self.client, "latest_position"):
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={
-                    "feature": "partitioned Kinesis stream reads need a "
-                    "shard-tip API; pass simple_reader=true for this client"
-                },
-            )
 
     def initialOffset(self) -> dict:
         init = self.client.initial_position
         offsets = {s: init for s in self.client.list_shards()}
-        # FRESH start: these offsets ARE the true consumer position, so
-        # they are a safe backpressure baseline — without this seed the
-        # first batch of a new query over a deep backlog planned the
-        # ENTIRE backlog per shard (the exact overload the cap exists
-        # to prevent). Checkpoint restores never call initialOffset;
-        # their baseline is set by the first partitions() call below.
+        # The true position of a new query, so a safe backpressure
+        # baseline; but Spark calls latestOffset() BEFORE initialOffset()
+        # on a new query, so its first batch is planned uncapped
+        # (perfbench's admission probe: 1 batch of 10000 records under a
+        # 625-per-shard cap). Checkpoint restores never call
+        # initialOffset; their baseline is set by the first partitions().
         self._last_end = dict(offsets)
         return offsets
 
@@ -421,16 +421,8 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
         # beyond the last planned end. Only once a baseline is known —
         # capping against a guess below the checkpointed position would
         # REWIND the offset log and replay records (at-most-once lost).
-        # So the first batch after a RESTART is uncapped.
-        # bound_advance is an OPTIONAL client capability (the documented
-        # protocol is initial_position/list_shards/read_between/
-        # latest_position): a custom client without it runs uncapped
-        # rather than dying with AttributeError on the first batch.
-        if (
-            self.max_per_shard
-            and self._last_end is not None
-            and hasattr(self.client, "bound_advance")
-        ):
+        # So the first batch of a query, new or restarted, is uncapped.
+        if self.max_per_shard and self._last_end is not None:
             init = self.client.initial_position
             tips = {
                 s: self.client.bound_advance(
@@ -471,12 +463,8 @@ class KinesisStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict) -> None:
         self.options = options
         self.client = _make_client(options)
-        # 0 means UNCAPPED (the partitioned tier's convention — one
-        # option value, one meaning across tiers); the shard clients
-        # check their limit after appending, so a literal limit=0 would
-        # instead crawl at one record per shard per trigger
-        mp = int(options.get("max_records_per_shard", "10000"))
-        self.max_per_shard = mp if mp > 0 else None
+        # bounded by default: this tier lands every batch on the driver
+        self.max_per_shard = _max_per_shard(options, 10000)
 
     def initialOffset(self) -> dict:
         init = self.client.initial_position
@@ -521,13 +509,14 @@ class KinesisPyDataSource(DataSource):
     micro-batch (backpressure — the streaming analogue of the
     reference's producer sleep loop, cloudfront_kinesis_lambda.py:219).
 
-    Tier-dependent DEFAULT for ``max_records_per_shard``: the
-    partitioned reader defaults to 0 (uncapped — it plans against shard
-    tips, so a batch is naturally bounded by the data present), while
-    the Simple driver-prefetch reader defaults to 10000 (it materializes
-    the batch on the driver, which must stay bounded). Switching tiers
-    on one checkpoint is offset-compatible but changes batch sizing
-    unless the option is set explicitly.
+    The shard client picks the stream tier (``streamReader``).
+    Tier-dependent DEFAULT for ``max_records_per_shard`` (0 means
+    uncapped in both): the partitioned reader defaults to 0 (it plans
+    against shard tips, so a batch is naturally bounded by the data
+    present), while the Simple reader defaults to 10000 (it materializes
+    the batch on the driver, which must stay bounded). Switching tiers on
+    one checkpoint is offset-compatible but changes batch sizing unless
+    the option is set explicitly.
     """
 
     @classmethod
@@ -542,11 +531,13 @@ class KinesisPyDataSource(DataSource):
 
     def streamReader(self, schema: StructType) -> KinesisPartitionedStreamReader:
         # Spark prefers this over simpleStreamReader; raising
-        # NotImplementedError here makes it fall back to the Simple tier
-        if str(self.options.get("simple_reader", "")).lower() == "true":
+        # PySparkNotImplementedError makes it fall back to the Simple
+        # tier, the one a client without the shard-tip pair can serve
+        client = _make_client(self.options)
+        if not (hasattr(client, "latest_position") and hasattr(client, "bound_advance")):
             raise PySparkNotImplementedError(
                 errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "simple_reader requested"},
+                messageParameters={"feature": "Kinesis stream reads without a shard tip"},
             )
         return KinesisPartitionedStreamReader(self.options)
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 
@@ -68,6 +69,31 @@ def spark():
         },
     )
     yield spark
+
+
+@contextlib.contextmanager
+def executed_plans(spark):
+    """Yield a list that, when the block exits, holds the final physical
+    plan of every SQL execution the block ran (read from the SQL status
+    store once the listener bus has drained) — iterative operators
+    checkpoint their intermediates, so the returned frame's own plan
+    does not show the joins that built it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def by_id():
+        bus.waitUntilEmpty()
+        it = store.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    before = set(by_id())
+    plans: list[str] = []
+    yield plans
+    plans.extend(p for i, p in by_id().items() if i not in before)
 
 
 @pytest.fixture(scope="session")

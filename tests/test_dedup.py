@@ -121,23 +121,33 @@ def test_winnow_pairs_agree_with_exact_on_corpus(docs, exact_pairs):
     assert strong <= got  # near-identical planted pairs always found
 
 
-def test_connected_components_transitive_chains(spark):
+@pytest.mark.parametrize("threshold", ["64m", "-1"])
+def test_connected_components_transitive_chains(spark, threshold):
     """A~B, B~C (A≁C directly) and a separate pair: min-label propagation
-    must collapse the chain into one cluster keyed by its min id."""
+    must collapse the chain into one cluster keyed by its min id — with
+    the label joins broadcast (the engine's 64m threshold) and in their
+    sort-merge formulation (broadcasts off)."""
+    from conftest import executed_plans
+
     from cloudfront_kinesis_log_lambda_spark.operators.dedup import (
         connected_components,
         near_dup_clusters,
     )
+    from cloudfront_kinesis_log_lambda_spark.session import scoped_conf
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long"
     )
-    labels = {r["node"]: r["label"] for r in connected_components(pairs).collect()}
-    assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
-
     docs = spark.createDataFrame([(i,) for i in [1, 2, 3, 5, 7, 8]], "doc_id long")
-    canon = {r["doc_id"]: r["canon_id"] for r in near_dup_clusters(docs, pairs).collect()}
+    conf = {"spark.sql.autoBroadcastJoinThreshold": threshold}
+    with scoped_conf(spark, conf), executed_plans(spark) as plans:
+        labels = {r["node"]: r["label"] for r in connected_components(pairs).collect()}
+        canon = {
+            r["doc_id"]: r["canon_id"] for r in near_dup_clusters(docs, pairs).collect()
+        }
+    assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
     assert canon == {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 8: 7}
+    assert any("BroadcastHashJoin" in p for p in plans) == (threshold != "-1")
 
 
 def test_minhash_kernel_matches_pure_python_across_chunk_boundaries(spark):

@@ -275,16 +275,35 @@ def test_fake_client_offset_protocol(tmp_path):
 
 
 def test_simple_reader_fallback_tier(spark, tmp_path):
-    """simple_reader=true opts into the SimpleDataSourceStreamReader
-    (driver-prefetch tier for data planes without a shard-tip API, e.g.
-    boto3); offsets are token-compatible with the partitioned default."""
+    """A source whose streamReader raises PySparkNotImplementedError
+    (what a client without a shard tip, e.g. boto3, makes
+    KinesisPyDataSource do) streams end to end through the
+    SimpleDataSourceStreamReader (driver-prefetch tier). The subclass
+    is defined in here so cloudpickle ships it by value and the Python
+    worker never imports this test module."""
+    from pyspark.errors import PySparkNotImplementedError
+
+    from cloudfront_kinesis_log_lambda_spark.sources.kinesis import (
+        KinesisPyDataSource,
+    )
+
+    class SimpleOnlyKinesis(KinesisPyDataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "kinesis_py_simple_only"
+
+        def streamReader(self, schema):
+            raise PySparkNotImplementedError(
+                errorClass="NOT_IMPLEMENTED",
+                messageParameters={"feature": "shard tip"},
+            )
+
     d = str(tmp_path / "stream")
     _write_shard(d, "shard-000", [(f"pk{i}", f"s{i}") for i in range(3)])
-    register_kinesis_source(spark)
+    spark.dataSource.register(SimpleOnlyKinesis)
     stream = (
-        spark.readStream.format("kinesis_py")
+        spark.readStream.format("kinesis_py_simple_only")
         .option("fake_dir", d)
-        .option("simple_reader", "true")
         .load()
     )
     q = (
@@ -342,11 +361,13 @@ def test_partitioned_reader_plans_ranges_reads_on_partitions(tmp_path):
 
 def test_partitioned_reader_admission_control(tmp_path):
     """max_records_per_shard caps each planned batch once the consumer
-    position is known. A FRESH start knows it (initialOffset IS the
-    position — a deep backlog must not land in one giant first batch);
-    a checkpoint RESTART does not until the restored offsets reach
-    partitions() (capping against a guessed baseline could rewind the
-    offset log), so only the restart's first batch is uncapped."""
+    position is known: after initialOffset() or after a partitions()
+    call. This test calls initialOffset() first, so its first batch is
+    capped. A live new query is not: Spark calls latestOffset() before
+    initialOffset(), so that query's first batch plans the whole
+    backlog. A checkpoint RESTART has no baseline until the restored
+    offsets reach partitions() (capping against a guessed baseline could
+    rewind the offset log), so its first batch is uncapped too."""
     from cloudfront_kinesis_log_lambda_spark.sources.kinesis import (
         KinesisPartitionedStreamReader,
     )
@@ -356,7 +377,7 @@ def test_partitioned_reader_admission_control(tmp_path):
     r = KinesisPartitionedStreamReader({"fake_dir": d, "max_records_per_shard": "3"})
 
     start = r.initialOffset()
-    end1 = r.latestOffset()          # fresh start: baseline 0 → capped
+    end1 = r.latestOffset()          # after initialOffset: baseline 0 → capped
     assert end1 == {"shard-000": 3}
     r.partitions(start, {"shard-000": 4})  # pretend the log planned 0→4
 
@@ -377,11 +398,12 @@ def test_partitioned_reader_admission_control(tmp_path):
     assert r2.latestOffset() == {"shard-000": 10}
 
 
-def test_tipless_client_auto_falls_back_to_simple_tier(monkeypatch, tmp_path):
-    """A shard client without latest_position (the boto3 case) makes the
-    partitioned reader raise PySparkNotImplementedError, which pyspark's
-    resolution catches and falls back to the Simple tier — no option
-    needed. Pinned against pyspark's internal _streamReader resolver."""
+def test_tipless_client_auto_falls_back_to_simple_tier(spark, monkeypatch, tmp_path):
+    """A shard client without the shard-tip pair (the boto3 case) makes
+    KinesisPyDataSource.streamReader raise PySparkNotImplementedError,
+    which pyspark's resolution catches and falls back to the Simple
+    tier — no option needed. Pinned against pyspark's internal
+    _streamReader resolver."""
     import pytest as _pytest
 
     try:
@@ -394,15 +416,19 @@ def test_tipless_client_auto_falls_back_to_simple_tier(monkeypatch, tmp_path):
 
     d = str(tmp_path / "stream")
     _write_shard(d, "shard-000", [("pk0", "x0")])
+    # needs an active SparkContext, hence the otherwise unused fixture
     schema = _parse_datatype_string(K.KINESIS_SCHEMA)
 
     ds = K.KinesisPyDataSource(options={"fake_dir": d})
     picked = _streamReader(ds, schema)
     assert "Simple" not in type(picked).__name__  # tip API present → partitioned
 
-    monkeypatch.delattr(K.FakeShardClient, "latest_position")
-    fallback = _streamReader(ds, schema)
-    assert "Simple" in type(fallback).__name__  # tip-less → Simple wrapper
+    # either half of the shard-tip pair missing → Simple wrapper
+    for missing in ("latest_position", "bound_advance"):
+        with monkeypatch.context() as m:
+            m.delattr(K.FakeShardClient, missing)
+            fallback = _streamReader(ds, schema)
+            assert "Simple" in type(fallback).__name__, missing
 
 
 def test_simple_reader_replay_covers_shards_born_midstream(tmp_path):
