@@ -18,7 +18,15 @@ Design principles (see SURVEY.md §4, §7):
   partition log stores by env/date, salt or AQE-skew-join hot keys.
 """
 
-from cloudfront_kinesis_log_lambda_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # lazy (PEP 562): the worker daemon runs as a submodule, and importing
+    # the package must not import pyspark before it drops Spark's zips
+    if name == "get_spark":
+        from cloudfront_kinesis_log_lambda_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -13,8 +13,11 @@ Spark-first translation:
   executor's Python worker over Arrow by ``mapInArrow``. Each task runs
   :func:`put_records_with_retry` synchronously (Spark supplies the
   concurrency asyncio provided). Tasks are not free: every Python task
-  pays a fixed start-up cost in the worker (about 0.25 s of CPU on a
-  4-core box), so more shipping tasks than cores only adds that cost.
+  pays a fixed start-up cost in the worker, about 0.02 s of CPU on a
+  4-core box with the engine's worker daemon
+  (:mod:`cloudfront_kinesis_log_lambda_spark.daemon`, which ``get_spark``
+  selects on a local master) and 0.17-0.24 s with Spark's own,
+  so more shipping tasks than cores only adds that cost.
   The reference's in-worker I/O overlap is ``io_concurrency``.
 - the producer's bounded-queue backpressure (…:219-220) is the streaming
   source's ``maxFilesPerTrigger`` — no code here.
@@ -310,7 +313,8 @@ class KinesisSink:
     consumers (cloudfront_kinesis_lambda.py:74) existed to overlap
     PutRecords latency, which ``io_concurrency`` does *within* each task
     — total in-flight puts = tasks × io_concurrency — without paying the
-    fixed per-Python-task cost 25 times.
+    fixed per-Python-task cost (about 0.02 s of CPU under the engine's
+    worker daemon, 0.17-0.24 s under Spark's) 25 times.
 
     As a ``foreachBatch`` function the sink adds each batch's
     :class:`PutStats` counters into :attr:`totals` on the driver, dropped
